@@ -1,0 +1,16 @@
+package perfbench
+
+/** Order statistics for the reported timings. */
+object Stats {
+  def median(xs: Seq[Double]): Double = quantile(xs, 0.5)
+
+  /** Linear interpolation between closest ranks. */
+  def quantile(xs: Seq[Double], q: Double): Double = {
+    require(xs.nonEmpty, "quantile of no samples")
+    val s = xs.sorted
+    val pos = q * (s.length - 1)
+    val lo = math.floor(pos).toInt
+    val hi = math.min(lo + 1, s.length - 1)
+    s(lo) + (s(hi) - s(lo)) * (pos - lo)
+  }
+}
