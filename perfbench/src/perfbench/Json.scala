@@ -3,36 +3,31 @@ package perfbench
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import scala.jdk.CollectionConverters._
 
-/** Minimal JSON writing for the result lines, and reading through the
+/** JSON for the result lines and the recorded outputs, through the
   * Jackson that ships with Spark. */
 object Json {
-  final case class Raw(text: String)
+  private val mapper = new ObjectMapper()
 
-  def obj(kv: Seq[(String, Any)]): Raw =
-    Raw(kv.map { case (k, v) => str(k) + ":" + value(v) }.mkString("{", ",", "}"))
-
-  def value(v: Any): String = v match {
-    case Raw(t) => t
-    case null => "null"
-    case b: Boolean => b.toString
-    case d: Double =>
-      require(!d.isNaN && !d.isInfinite, s"non-finite number $d in result")
-      d.toString
-    case f: Float => value(f.toDouble)
-    case n: Int => n.toString
-    case n: Long => n.toString
-    case s: String => str(s)
-    case o => str(o.toString)
+  /** A JSON object with its keys in the given order; values are numbers,
+    * booleans, strings, null or nested [[Obj]]s. */
+  final case class Obj(kv: Seq[(String, Any)]) {
+    def text: String = mapper.writeValueAsString(toJava(this))
   }
 
-  def str(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  def obj(kv: Seq[(String, Any)]): Obj = Obj(kv)
 
-  def read(path: String): JsonNode = new ObjectMapper().readTree(new java.io.File(path))
+  private def toJava(v: Any): AnyRef = v match {
+    case Obj(kv) =>
+      val m = new java.util.LinkedHashMap[String, AnyRef]
+      kv.foreach { case (k, x) => m.put(k, toJava(x)) }
+      m
+    case d: Double =>
+      require(!d.isNaN && !d.isInfinite, s"non-finite number $d in result")
+      Double.box(d)
+    case x => x.asInstanceOf[AnyRef]
+  }
+
+  def read(path: String): JsonNode = mapper.readTree(new java.io.File(path))
 }
 
 /** Output values recorded from earlier runs (see `Record`). */

@@ -8,7 +8,7 @@ import org.apache.spark.scheduler._
   *
   * Every task is added to the running totals of the group its job was
   * tagged with (`""` when untagged), so an untraced run still gets the
-  * whole-iteration peak memory and spill, and a traced run gets one row
+  * whole-pass peak memory and spill, and a traced run gets one row
   * per layer call. Listener events arrive asynchronously; read totals
   * only after [[settle]]. */
 final class Ledger extends SparkListener {

@@ -1,16 +1,19 @@
 package perfbench
 
 import java.lang.management.ManagementFactory
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 
 /** The benchmark program. `perfbench/run.py` builds it and starts it as
   *
   *   Main --workload <name> --seed <n> --seconds <s> --trace <0|1> --bench-dir <dir>
   *
-  * One closed loop: a single client runs one iteration at a time in one
-  * JVM whose Spark master has as many threads as the host has cores.
-  * Set-up (session, models, seeded input, warm-up iterations) is timed
-  * apart from the iterations. The last stdout line is the result JSON;
+  * One closed loop: a single client runs one pass of the workload's
+  * steps at a time in one JVM whose Spark master has as many threads as
+  * the host has cores. Set-up (session, models, seeded input, warm-up
+  * passes) is timed apart from the passes. Each step is timed on its
+  * own; `wall_s` and `cpu_s` are the sums over steps of each step's
+  * median over the passes. The last stdout line is the result JSON;
   * the line before it holds the run facts and, in a traced run, the full
   * per-layer table. Exit code 0 only if every output check passed. */
 object Main {
@@ -41,6 +44,12 @@ object Main {
       .appName("perfbench")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
+      // One query_suite pass generates more classes than the default 100
+      // entries of the codegen cache, so with the default every warm pass
+      // would recompile every class (cyclic LRU misses) and the JIT
+      // would never settle. Cold compiles stay in the warm-up, and so in
+      // setup_s; loop_codegen_compiles shows any miss in the loop.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", localDir)
@@ -81,8 +90,21 @@ object Main {
   private def log(msg: String): Unit =
     System.err.println(f"perfbench ${secs(started)}%7.2f s  $msg")
 
-  final case class Sample(wallS: Double, cpuS: Double, tasks: Ledger.Snapshot,
-      tracer: Option[Tracer])
+  /** Passes run at least this often, so each step's median has three
+    * samples even for a short `--seconds`. */
+  val MinPasses = 3
+
+  /** Collection time of all garbage collectors and JIT compile time so
+    * far, in seconds: where the loop's CPU time outside Spark tasks goes. */
+  private def gcS(): Double =
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum / 1e3
+  private def jitS(): Double = ManagementFactory.getCompilationMXBean.getTotalCompilationTime / 1e3
+  /** Janino compiles of generated code so far (codegen cache misses). */
+  private def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  final case class Sample(wallS: Double, stepWallS: Seq[Double], stepCpuS: Seq[Double],
+      tasks: Ledger.Snapshot, tracer: Option[Tracer])
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
@@ -100,49 +122,61 @@ object Main {
       graft.lid.LidModels.default
       val modelsS = secs(tModels)
       val w = workload(spark, a)
-      // the input is built three times; set-up counts the median build
-      val genS = Stats.median((1 to 3).map { _ =>
-        val t0 = System.nanoTime(); w.generate(); secs(t0) })
+      val tGen = System.nanoTime()
+      w.generate()
+      val genS = secs(tGen)
       val tWarm = System.nanoTime()
       (1 to w.warmups).foreach { i =>
-        ops += w.iteration(None)
-        log(f"warm-up iteration $i done")
+        ops += w.pass(None)
+        log(f"warm-up pass $i done")
       }
       val warmS = secs(tWarm)
       val setupS = sessionS + modelsS + genS + warmS
       log(f"set-up $setupS%.2f s: session $sessionS%.2f, models $modelsS%.2f, input $genS%.2f, warm-up $warmS%.2f")
 
-      /** Untraced: iterations until the next one would end past
-        * `--seconds`. Traced: one iteration. */
+      /** Untraced: the passes that fill `--seconds` at the workload's
+        * nominal pass time, and at least [[MinPasses]]. The count is
+        * fixed, not found by the clock: passes still get slightly faster
+        * as the JIT works on, so a run that fitted one more pass reported
+        * a lower median, which doubled the run-to-run spread. Traced: one
+        * pass. */
       def timed(traced: Boolean): Seq[Sample] = {
-        val out = Vector.newBuilder[Sample]
-        val t0 = System.nanoTime()
-        var walls = Vector.empty[Double]
-        do {
+        val passes = if (traced) 1 else math.max(MinPasses, math.round(a.seconds / w.nominalPassS).toInt)
+        (1 to passes).map { _ =>
           ledger.reset()
           val tr = if (traced) Some(new Tracer(spark, ledger)) else None
-          val c0 = cpuNanos()
-          val i0 = System.nanoTime()
-          ops += w.iteration(tr)
-          val wall = secs(i0)
-          val cpu = (cpuNanos() - c0) / 1e9
+          val times = w.steps.map { s =>
+            val c0 = cpuNanos()
+            val i0 = System.nanoTime()
+            ops += w.run(s, tr)
+            (secs(i0), (cpuNanos() - c0) / 1e9)
+          }
+          val wall = times.map(_._1).sum
           ledger.settle(spark.sparkContext)
-          out += Sample(wall, cpu, ledger.all(), tr)
-          log(f"iteration ${if (traced) "(traced) " else ""}wall $wall%.3f s, cpu $cpu%.3f s")
-          walls :+= wall
-        } while (!traced && secs(t0) + Stats.median(walls) <= a.seconds)
-        out.result()
+          log(f"pass ${if (traced) "(traced) " else ""}wall $wall%.3f s, cpu ${times.map(_._2).sum}%.3f s")
+          Sample(wall, times.map(_._1), times.map(_._2), ledger.all(), tr)
+        }
       }
 
+      /** sum over steps of the step's median over the samples */
+      def sumOfMedians(samples: Seq[Sample], f: Sample => Seq[Double]): Double =
+        samples.map(f).transpose.map(Stats.median).sum
+
       val j0 = cpuJiffies()
+      val (gc0, jit0, cg0) = (gcS(), jitS(), codegenCompiles())
       val samples = timed(traced = false)
+      val (gcLoop, jitLoop, cgLoop) = (gcS() - gc0, jitS() - jit0, codegenCompiles() - cg0)
+      w.steps.indices.foreach { i =>
+        log(f"step ${w.steps(i)}%-24s median wall ${Stats.median(samples.map(_.stepWallS(i)))}%.3f s, " +
+          f"cpu ${Stats.median(samples.map(_.stepCpuS(i)))}%.3f s")
+      }
       // share of the host's CPU time the hypervisor gave to other guests
       // while the loop ran: the usual cause of an outlier on a shared VM
       val steal = for ((s0, t0) <- j0; (s1, t1) <- cpuJiffies() if t1 > t0)
         yield (s1 - s0).toDouble / (t1 - t0)
       ops += w.check()
       log("checks done")
-      val wall = Stats.median(samples.map(_.wallS))
+      val wall = sumOfMedians(samples, _.stepWallS)
       val facts = Seq[(String, Any)](
         "workload" -> a.workload, "seed" -> a.seed,
         "nproc" -> Runtime.getRuntime.availableProcessors,
@@ -150,9 +184,10 @@ object Main {
         "jdk" -> sys.props("java.version"), "spark" -> spark.version,
         "git_sha" -> sys.props.getOrElse("perfbench.gitSha", "unknown"),
         "item" -> w.itemName, "items" -> w.items,
-        "iterations" -> samples.size,
-        "wall_s_q1" -> Stats.quantile(samples.map(_.wallS), 0.25),
-        "wall_s_q3" -> Stats.quantile(samples.map(_.wallS), 0.75),
+        "passes" -> samples.size,
+        "pass_wall_s_q1" -> Stats.quantile(samples.map(_.wallS), 0.25),
+        "pass_wall_s_q3" -> Stats.quantile(samples.map(_.wallS), 0.75),
+        "loop_gc_s" -> gcLoop, "loop_jit_s" -> jitLoop, "loop_codegen_compiles" -> cgLoop,
         "session_s" -> sessionS, "models_s" -> modelsS,
         "generate_s" -> genS, "warmup_s" -> warmS,
         "peak_exec_mem_mb" -> Stats.median(samples.map(_.tasks.peakMemMb)),
@@ -166,7 +201,7 @@ object Main {
         if (!a.trace) Seq(
           ("setup_s", setupS, "s"),
           ("wall_s", wall, "s"),
-          ("cpu_s", Stats.median(samples.map(_.cpuS)), "s"),
+          ("cpu_s", sumOfMedians(samples, _.stepCpuS), "s"),
           ("items_per_s", w.items / wall, "items/s"))
         else {
           val traced = timed(traced = true)

@@ -24,7 +24,7 @@ object Record {
           val w = new ClipPipeline(spark, seed, n, None)
           w.generate()
           val ds = (1 to (if (seed == first) 2 else 1)).map { _ =>
-            w.iteration(None)
+            w.pass(None)
             val ops = w.check()
             require(ops.failed == 0, s"seed $seed: ${ops.errors.mkString("; ")}")
             w.lastDigest
@@ -38,7 +38,7 @@ object Record {
           "clips" -> n, "digests" -> Json.obj(digests))))
       case "query_suite" =>
         val w = new QuerySuite(spark, s"$benchDir/data/sf0.01", Map.empty)
-        val runs = (1 to 2).map { _ => w.iteration(None); w.results.toMap }
+        val runs = (1 to 2).map { _ => w.pass(None); w.results }
         QuerySuite.Names.foreach { q =>
           require(runs.forall(_.contains(q)), s"$q failed")
           require(runs.map(_(q)).distinct.size == 1, s"$q: unstable result ${runs.map(_(q))}")
@@ -52,7 +52,7 @@ object Record {
     } finally spark.stop()
   }
 
-  private def write(path: String, j: Json.Raw): Unit = {
+  private def write(path: String, j: Json.Obj): Unit = {
     Files.createDirectories(Paths.get(path).getParent)
     Files.writeString(Paths.get(path), j.text + "\n")
   }

@@ -1,6 +1,6 @@
 package perfbench
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.Pipeline
@@ -8,7 +8,7 @@ import graft.lid.LidModels
 import graft.model.ClipRow
 import graft.operators._
 
-/** Outcome of one iteration or check: operations attempted and failed,
+/** Outcome of one step or check: operations attempted and failed,
   * with one message per failure. */
 final case class Ops(attempted: Long, failed: Long, errors: Seq[String] = Nil) {
   def +(o: Ops): Ops = Ops(attempted + o.attempted, failed + o.failed, errors ++ o.errors)
@@ -20,24 +20,29 @@ object Ops {
     if (ok) Ops(1, 0) else Ops(1, 1, Seq(s"$what: $detail"))
 }
 
-/** One benchmark workload: a seeded input built in set-up, an iteration
-  * that calls the program on it (optionally under a [[Tracer]]), and the
-  * checks of the program's outputs. */
+/** One benchmark workload: a seeded input built in set-up, a pass of
+  * timed steps that call the program on it (optionally under a
+  * [[Tracer]]), and the checks of the program's outputs. */
 trait Workload {
-  /** What an item is (clip, query, doc) and how many one iteration does. */
+  /** What an item is (clip, query) and how many one pass does. */
   def itemName: String
   def items: Long
-  /** Untimed iterations before the loop, chosen where per-iteration CPU
-    * time had mostly stopped falling (JIT and codegen settled) on a
-    * 4-vCPU host. */
+  /** Untimed passes before the loop. */
   def warmups: Int
-  /** Build the seeded input and materialize it; may be called again. */
+  /** Wall time of one warm pass on a 4-vCPU host; the loop runs
+    * `--seconds` / this many passes. */
+  def nominalPassS: Double
+  /** Build the seeded input and materialize it. */
   def generate(): Unit
   def facts: Seq[(String, Any)]
-  def iteration(tr: Option[Tracer]): Ops
-  /** Checks on the last iteration's outputs, after timing. */
+  /** The steps of one pass, in the order they run. Each is timed on its
+    * own, so a stall in one step spoils one sample of that step only. */
+  def steps: Seq[String]
+  def run(step: String, tr: Option[Tracer]): Ops
+  def pass(tr: Option[Tracer]): Ops = steps.map(run(_, tr)).reduce(_ + _)
+  /** Checks on the last pass's outputs, after timing. */
   def check(): Ops
-  /** Per-layer table from one traced iteration's spans. */
+  /** Per-layer table from one traced pass's spans. */
   def layers(tr: Tracer): Seq[(String, Double)]
   /** Fixed sample of the workload's texts for the single-thread LID timings. */
   def sampleTexts: Seq[String]
@@ -49,14 +54,17 @@ final class ClipPipeline(spark: SparkSession, seed: Long, n: Long,
     expected: Option[String]) extends Workload {
   val itemName = "clip"
   def items: Long = n
+  /** where per-pass CPU time had mostly stopped falling (JIT and codegen
+    * settled) on a 4-vCPU host */
   val warmups = 4
+  val nominalPassS = 3.0
+  val steps = Seq("pipeline")
   private val parts = spark.sparkContext.defaultParallelism
   private var clips: Dataset[ClipRow] = _
   private var last: Pipeline.Result = _
   private var traced: Dataset[graft.model.Stage1Row] = _
 
   def generate(): Unit = {
-    if (clips != null) clips.unpersist(blocking = true)
     clips = Pipeline.clips(spark, n, seed, parts).persist(StorageLevel.MEMORY_AND_DISK)
     clips.count()
   }
@@ -67,7 +75,7 @@ final class ClipPipeline(spark: SparkSession, seed: Long, n: Long,
   private def drop(r: Pipeline.Result): Unit =
     if (r != null) r.stage1.unpersist(blocking = true)
 
-  def iteration(tr: Option[Tracer]): Ops = tr match {
+  def run(step: String, tr: Option[Tracer]): Ops = tr match {
     case None =>
       drop(last)
       val r = Pipeline.run(spark, clips)
@@ -149,7 +157,7 @@ final class ClipPipeline(spark: SparkSession, seed: Long, n: Long,
 }
 
 object ClipPipeline {
-  val DefaultClips = 20000L
+  val DefaultClips = 40000L
 
   /** Digest of (clip_id, keep, drop_reason, scrubbed transcript) over all
     * decisions; the transcript is null for dropped clips. */
@@ -196,92 +204,93 @@ object Micro {
 }
 
 /** A fixed list of `SparkEntry.queries` over the benchmark's copy of the
-  * sf0.01 test tables, each forced by collecting its rows, whose count
-  * and digest must match the values recorded for it. */
+  * sf0.01 test tables. Each query is one step, forced by collecting its
+  * rows; after timing, each query's row count and digest must match the
+  * values recorded for it. */
 final class QuerySuite(spark: SparkSession, dataDir: String,
     expected: Map[String, (Long, String)]) extends Workload {
   val itemName = "query"
   def items: Long = QuerySuite.Names.size
+  /** every plan once, which also absorbs the first-query artefact seen
+    * on `a12_dominant` in earlier Bench rounds, then once more: after one
+    * warm-up pass the first timed passes were still clearly slower */
   val warmups = 2
+  val nominalPassS = 4.0
+  val steps: Seq[String] = QuerySuite.Names
   private val fns = graft.SparkEntry.queries
 
   def generate(): Unit = ()
   def facts: Seq[(String, Any)] = Seq("queries" -> items,
     "data" -> new java.io.File(dataDir).getName)
 
-  /** rows and digest per query, from the last iteration */
-  val results = scala.collection.mutable.LinkedHashMap.empty[String, (Long, String)]
+  /** rows per query from the last pass; a query that threw has none */
+  private val rows = scala.collection.mutable.HashMap.empty[String, Array[Row]]
 
-  def runQuery(q: String): Ops = {
-    val rows = try Right(fns(q)(spark, dataDir).collect())
-    catch { case scala.util.control.NonFatal(e) => Left(s"$q failed: $e") }
-    rows match {
-      case Left(msg) => results.remove(q); Ops(1, 1, Seq(msg))
-      case Right(rs) =>
-        val got = (rs.length.toLong, Digest.hex(Digest.ofRows(rs.iterator)))
-        results(q) = got
-        expected.get(q) match {
-          case Some(e) if e == got => Ops(1, 0)
-          case Some(e) => Ops(1, 1, Seq(s"$q: got rows=${got._1} digest=${got._2}, recorded rows=${e._1} digest=${e._2}"))
-          case scala.None => Ops(1, 1, Seq(s"$q: no recorded result"))
-        }
-    }
+  def run(q: String, tr: Option[Tracer]): Ops = {
+    def go(): Ops =
+      try { rows(q) = fns(q)(spark, dataDir).collect(); Ops(1, 0) }
+      catch { case scala.util.control.NonFatal(e) => rows.remove(q); Ops(1, 1, Seq(s"$q failed: $e")) }
+    tr.fold(go())(t => t.span(s"suite.$q")(go()))
   }
 
-  def iteration(tr: Option[Tracer]): Ops =
-    QuerySuite.Names.map { q =>
-      tr match {
-        case None => runQuery(q)
-        case Some(t) => t.span(s"suite.$q")(runQuery(q))
-      }
-    }.reduce(_ + _)
+  /** Row count and digest of each query that returned rows in the last pass. */
+  def results: Map[String, (Long, String)] = rows.map { case (q, rs) =>
+    q -> (rs.length.toLong, Digest.hex(Digest.ofRows(rs.iterator)))
+  }.toMap
 
-  def check(): Ops = Ops.None
+  def check(): Ops = {
+    val got = results
+    QuerySuite.Names.filter(got.contains).map { q =>
+      val g = got(q)
+      expected.get(q) match {
+        case Some(e) => Ops.check(q, e == g, s"got rows=${g._1} digest=${g._2}, recorded rows=${e._1} digest=${e._2}")
+        case scala.None => Ops.check(q, ok = false, "no recorded result")
+      }
+    }.foldLeft(Ops.None)(_ + _)
+  }
 
   def layers(tr: Tracer): Seq[(String, Double)] = {
-    val named = QuerySuite.Names.filter(QuerySuite.namedAlone)
-      .map(q => s"suite.$q.wall_s" -> tr.wall(s"suite.$q"))
-    val groups = QuerySuite.Names.filterNot(QuerySuite.namedAlone)
-      .groupBy(QuerySuite.group).toSeq.sortBy(_._1)
-      .map { case (g, qs) => s"suite.$g.wall_s" -> qs.map(q => tr.wall(s"suite.$q")).sum }
+    val byLayer = QuerySuite.Layer.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (l, qs) => s"suite.$l.wall_s" -> qs.map(q => tr.wall(s"suite.${q._1}")).sum }
     val shuffle = tr.spans.values.map(_.tasks.shuffleMb).sum
-    named ++ groups :+ ("suite.shuffle_mb" -> shuffle)
+    byLayer :+ ("suite.shuffle_mb" -> shuffle)
   }
 
   lazy val sampleTexts: Seq[String] =
     spark.read.parquet(s"$dataDir/documents.parquet").select("text")
       .orderBy("doc_id").limit(Micro.SampleSize).collect().map(_.getString(0)).toSeq
 
-  def release(): Unit = ()
+  def release(): Unit = rows.clear()
 }
 
 object QuerySuite {
-  /** The queries one iteration runs, in this order (name order).
+  /** The queries of one pass, each with the name its time is reported
+    * under in the traced run: its own for the dedup, `sim_*` and `mm_*`
+    * queries, else its group.
     *
     * Not the whole `SparkEntry.queries` surface: one pass over its 85
     * non-pipeline queries takes ~48 s warm and ~85 s cold on 4 cores,
     * more than a whole run may take. The list keeps a query from every
     * group, and reaches every layer `clip_pipeline` does not: relational
-    * plans (q3, w1), the reference analyses (a12, whose first-query
-    * warm-up artefact the set-up warm-up absorbs; the stage-2 cascade),
+    * plans (q3, w1), the reference analyses (a12, the stage-2 cascade),
     * the text and sampling tiers, the `functions` codegen expressions
     * (alpha ratio, simhash, vector ops), `Dedup` (MinHash-LSH and
     * SimHash in star mode), the audio `Fft` tier, `Similarity` and
     * `Multimodal`. */
-  val Names: Seq[String] = Seq(
-    "a12_dominant", "cascade_decide", "dedup_audio_neardup",
-    "dedup_minhash_lsh_star", "dedup_simhash_star", "mm_resize",
-    "p1_alpha_ratio", "q3_revenue_topk", "sample_stratified",
-    "sim_topk_bruteforce", "text_tokens", "w1_running_sum").sorted
+  val Layer: Map[String, String] = Map(
+    "a12_dominant" -> "reference",
+    "cascade_decide" -> "reference",
+    "dedup_audio_neardup" -> "dedup_audio_neardup",
+    "dedup_minhash_lsh_star" -> "dedup_minhash_lsh_star",
+    "dedup_simhash_star" -> "dedup_simhash_star",
+    "mm_resize" -> "mm_resize",
+    "p1_alpha_ratio" -> "reference",
+    "q3_revenue_topk" -> "relational",
+    "sample_stratified" -> "sample",
+    "sim_topk_bruteforce" -> "sim_topk_bruteforce",
+    "text_tokens" -> "text",
+    "w1_running_sum" -> "relational")
 
-  /** Queries whose time is reported on its own; the rest by group. */
-  def namedAlone(q: String): Boolean =
-    q.startsWith("dedup_") || q.startsWith("sim_") || q.startsWith("mm_")
-
-  def group(q: String): String =
-    if (q.startsWith("sample_")) "sample"
-    else if (q.startsWith("text_") || q.startsWith("pack_") || q.startsWith("quality_")) "text"
-    else if (Seq("a", "f", "p").exists(p => q.matches(s"$p\\d.*")) || q == "t5_top_disagreements" ||
-      q.startsWith("stage1b_") || q == "cascade_decide") "reference"
-    else "relational"
+  /** in name order */
+  val Names: Seq[String] = Layer.keys.toSeq.sorted
 }
