@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract). Two parts:
   *
   *  1. Flagship clip pipeline: synthesize SPARK_GRAFT_CLIPS clips
@@ -17,17 +15,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus
     val nClips = sys.env.getOrElse("SPARK_GRAFT_CLIPS", "240000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.make("graft-bench")
     import spark.implicits._
 
     // ---- 0a. input mode. "gen" (default) synthesizes clips inside the
@@ -42,11 +32,11 @@ object Bench {
       if (inputMode == "table") {
         val clipDir = java.nio.file.Files
           .createTempDirectory("bench-clips").toString
-        Pipeline.clips(spark, nClips, partitions = cpus.toInt)
+        Pipeline.clips(spark, nClips, partitions = cpus)
           .write.mode("overwrite").parquet(clipDir)
         import spark.implicits._
         spark.read.parquet(clipDir).as[graft.model.ClipRow]
-      } else Pipeline.clips(spark, nClips, partitions = cpus.toInt)
+      } else Pipeline.clips(spark, nClips, partitions = cpus)
 
     // ---- 0b. warmup: run every plan once at small N so whole-stage
     // codegen + JIT compile outside the timed window (steady-state
@@ -54,7 +44,7 @@ object Bench {
     // first seconds)
     locally {
       val w = Pipeline.run(spark, Pipeline.clips(spark, 20000L,
-        partitions = cpus.toInt))
+        partitions = cpus))
       w.scrubbed.count()
       Pipeline.metrics(spark, w.decisions).count()
       w.stage1.unpersist()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.Eval
 
 /** End-to-end smoke main: synthesize clips, run all stages, print the
@@ -8,19 +7,11 @@ import graft.operators.Eval
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 2000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.make("graft-pipeline-demo")
     import spark.implicits._
 
     val t0 = System.nanoTime()
-    val clips = Pipeline.clips(spark, n, partitions = cpus.toInt)
+    val clips = Pipeline.clips(spark, n, partitions = Session.cpus)
     val gold = Pipeline.gold(spark, n)
     val result = Pipeline.run(spark, clips)
     val kept = result.decisions.filter($"keep").count()

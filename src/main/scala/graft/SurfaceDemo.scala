@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.AlphaRatio
 import graft.lineage.Checkpoint
@@ -14,14 +13,8 @@ import graft.streaming.StreamingFilter
 object SurfaceDemo {
   def main(args: Array[String]): Unit = {
     val wh = java.nio.file.Files.createTempDirectory("warehouse").toString
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.make("graft-surface-demo",
+      "spark.sql.warehouse.dir" -> wh)
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("surface").toString
 

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,14 +10,7 @@ object Verify {
     // comma-separated query names to dump instead of the full surface
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.make("graft-verify")
     new java.io.File(outDir).mkdirs()
     def deleteRec(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(deleteRec)
@@ -28,7 +21,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // remove any PREVIOUS run's output for this query — leaving it
         // would let the oracle compare validate stale results as a pass

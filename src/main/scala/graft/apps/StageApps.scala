@@ -2,6 +2,7 @@ package graft.apps
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import graft.Session
 import graft.model._
 import graft.operators._
 import graft.sources.JsonlIO
@@ -11,24 +12,10 @@ import graft.sources.JsonlIO
   * files (parquet by default, .jsonl dirs when the path ends in
   * `.jsonl`), exactly like the reference's per-stage outputs — which is
   * what makes runs resumable and lets machines join/leave freely
-  * (README.md:350-366).
+  * (README.md:350-366). [[StageIO]] is the stage-boundary IO they
+  * share; every CLI builds its session with [[graft.Session.make]].
   */
-object AppSession {
-  def make(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName(name)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.functions.AlphaRatio.register(s)
-    s
-  }
-
+object StageIO {
   def readClips(spark: SparkSession, in: String) = {
     import spark.implicits._
     if (in.contains(".jsonl")) JsonlIO.readClips(spark, in)
@@ -46,8 +33,8 @@ object AppSession {
 object GenClipsApp {
   def main(args: Array[String]): Unit = {
     val Array(out, n) = args.take(2)
-    val spark = AppSession.make("graft-genclips")
-    AppSession.write(
+    val spark = Session.make("graft-genclips")
+    StageIO.write(
       graft.Pipeline.clips(spark, n.toLong).toDF(), out)
     spark.stop()
   }
@@ -58,9 +45,9 @@ object GenClipsApp {
 object Stage1App {
   def main(args: Array[String]): Unit = {
     val Array(in, out) = args.take(2)
-    val spark = AppSession.make("graft-stage1")
-    val s1 = Stage1(spark, AppSession.readClips(spark, in))
-    AppSession.write(s1.toDF(), out)
+    val spark = Session.make("graft-stage1")
+    val s1 = Stage1(spark, StageIO.readClips(spark, in))
+    StageIO.write(s1.toDF(), out)
     spark.stop()
   }
 }
@@ -70,7 +57,7 @@ object Stage1App {
 object Stage1bApp {
   def main(args: Array[String]): Unit = {
     val Array(in, out) = args.take(2)
-    val spark = AppSession.make("graft-stage1b")
+    val spark = Session.make("graft-stage1b")
     import spark.implicits._
     val s1 = spark.read.parquet(in).as[Stage1Row]
     val stats = Stage1b(spark, s1).collect().toSeq
@@ -86,7 +73,7 @@ object Stage1bApp {
 object Stage2App {
   def main(args: Array[String]): Unit = {
     val Array(in, statsIn, out) = args.take(3)
-    val spark = AppSession.make("graft-stage2")
+    val spark = Session.make("graft-stage2")
     import spark.implicits._
     val s1 = spark.read.parquet(in).as[Stage1Row]
     val stats = JsonlIO.readStats(spark, statsIn)
@@ -97,10 +84,10 @@ object Stage2App {
       JsonlIO.writeJsonlCleaned(decisions.toDF(), out,
         JsonlIO.DecisionRequired)
     } else {
-      AppSession.write(decisions.toDF(), out)
+      StageIO.write(decisions.toDF(), out)
       OutputContract.validateDecisions(spark, spark.read.parquet(out))
     }
-    AppSession.write(graft.Pipeline.metrics(spark, decisions).toDF(),
+    StageIO.write(graft.Pipeline.metrics(spark, decisions).toDF(),
       s"$out.metrics")
     spark.stop()
   }
@@ -111,10 +98,10 @@ object Stage2App {
 object Stage3App {
   def main(args: Array[String]): Unit = {
     val Array(in, out) = args.take(2)
-    val spark = AppSession.make("graft-stage3")
+    val spark = Session.make("graft-stage3")
     import spark.implicits._
     val decisions = spark.read.parquet(in).as[DecisionRow]
-    AppSession.write(Stage3(spark, decisions).toDF(), out)
+    StageIO.write(Stage3(spark, decisions).toDF(), out)
     spark.stop()
   }
 }

@@ -284,6 +284,18 @@ object TextStats {
     h
   }
 
+  /** Capacity of [[shingleHashes]]' table for `m` windows: the next
+    * power of two >= 2m, at least 16. Computed in Long: in Int, 2m
+    * overflows at m >= 2^30, leaving a 16-slot table whose probe loop
+    * never finds a free slot. A table that cannot be an array fails. */
+  private[lid] def shingleTableCapacity(m: Int): Int = {
+    var cap = 16L
+    while (cap < 2L * m) cap <<= 1
+    require(cap <= (1 << 30),
+      s"$m shingle windows need a $cap-slot table; at most 2^30 fit an array")
+    cap.toInt
+  }
+
   /** Distinct FNV-1a 64 hashes of the char n-shingles of the normalized
     * text — value-wise EXACTLY `shingles(text, n).map(fnv64)` as a set
     * (up to in-document 64-bit collisions, which collapse two distinct
@@ -302,11 +314,10 @@ object TextStats {
     if (norm.isEmpty) return Array.emptyLongArray
     if (norm.length < n) return Array(fnv64(norm))
     val m = norm.length - n + 1
-    // open-addressed set, capacity = next pow2 >= 2m (load <= 0.5);
-    // 0L is the empty sentinel — a real zero hash (vanishingly rare but
-    // legal) is tracked by the flag instead of a slot
-    var cap = 16
-    while (cap < m * 2) cap <<= 1
+    // open-addressed set (load <= 0.5); 0L is the empty sentinel — a
+    // real zero hash (vanishingly rare but legal) is tracked by the flag
+    // instead of a slot
+    val cap = shingleTableCapacity(m)
     val mask = cap - 1
     val table = new Array[Long](cap)
     val out = new Array[Long](m)

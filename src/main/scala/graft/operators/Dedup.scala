@@ -33,24 +33,27 @@ object Dedup {
   /** Plan-observability hook (guide §1/§7.2): the eager tiers
     * (localCheckpoint inside the operator) return a computed RDD scan,
     * so their INTERESTING physical plan — exchanges, join strategy —
-    * is gone by the time a caller can explain() the result. With
-    * `-Dgraft.explain.capture=true` each eager tier records the
-    * formatted plan of the frame it is about to materialize; plain runs
-    * pay one boolean system-property check. Drained by BenchExtra's
-    * explain mode. */
-  private[graft] val capturedPlans =
-    new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    * is gone by the time a caller can explain() the result. Inside
+    * [[capturingPlans]] each eager tier records the formatted plan of
+    * the frame it is about to materialize; other runs pay one volatile
+    * read. Used by graft.Explain. */
+  @volatile private var captured: java.util.Queue[(String, String)] = null
   private[graft] def capturePlan(tag: String, df: DataFrame): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.explain.capture"))
-      capturedPlans.add(tag -> df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+    val q = captured
+    if (q != null) q.add(tag -> df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode))
     df
   }
-  private[graft] def drainCapturedPlans(): Seq[(String, String)] = {
-    val b = Seq.newBuilder[(String, String)]
-    var m = capturedPlans.poll()
-    while (m != null) { b += m; m = capturedPlans.poll() }
-    b.result()
+  /** `body`'s result and the (tier, plan) pairs the eager tiers recorded
+    * while it ran, in order. */
+  private[graft] def capturingPlans[T](body: => T): (T, Seq[(String, String)]) = {
+    val q = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    captured = q
+    try {
+      val r = body
+      import scala.jdk.CollectionConverters._
+      (r, q.asScala.toSeq)
+    } finally captured = null
   }
 
   /** Scale-adaptive fan-out for the expensive row-local stages (guide
@@ -223,10 +226,10 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val sz = pruned.groupBy($"id").agg(count(lit(1)).as("sz"))
     // Pair generation stays the a⋈b SELF-JOIN, not a grouped posting
-    // list: both were A/B-measured alternating inside one JVM
-    // (apps/ProfileNgramPairs, the only protocol that beats this host's
-    // ambient noise) and the whole-stage-codegen join + partial
-    // aggregate beat the posting-list flatMap by ~1.4x on the
+    // list: both were A/B-measured alternating inside one JVM (the only
+    // protocol that beats this host's ambient noise; receipt in
+    // BENCH/r06_pair_generation_ab.md), and the whole-stage-codegen
+    // join + partial aggregate beat the posting-list flatMap by ~1.4x on the
     // dedup_text_keep instance (selfjoin 1.8-2.5 s vs posting
     // 3.2-4.4 s end-to-end) — encoding millions of pair tuples through
     // a typed Dataset boundary costs more than the join's second
@@ -721,6 +724,11 @@ object Dedup {
     * Documents with fewer than `guarantee` hash positions winnow their
     * single truncated window. Selected spans groupBy-count across docs;
     * output = spans appearing in ≥ minDocs distinct documents.
+    *
+    * Precondition: `idCol` is unique (one input row per document). The
+    * span census counts rows, which equals distinct documents only
+    * then; rows sharing an id inflate `n_docs` and can lift a span past
+    * `minDocs`. Drop duplicate ids first (`dropDuplicates(idCol)`).
     *
     * The winnow is per-document, so it runs ROW-LOCALLY in a narrow
     * mapPartitions — the first cut ran it as explode + per-doc window
@@ -1525,9 +1533,10 @@ object Dedup {
     val pruned = materialize(lm.join(rare, Seq("hash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // Pair generation stays the a⋈b SELF-JOIN: the grouped-posting-list
-    // rewrite was A/B-measured alternating in one JVM
-    // (apps/ProfileAudioPairs) and lost by ~25% (selfjoin 0.99-1.03 s
-    // vs posting 1.22-1.26 s for pair stage + delta histogram + argmax)
+    // rewrite was A/B-measured alternating in one JVM (receipt in
+    // BENCH/r06_pair_generation_ab.md) and lost by ~25% (selfjoin
+    // 0.99-1.03 s vs posting 1.22-1.26 s for pair stage + delta
+    // histogram + argmax)
     // — the typed flatMap's tuple encoding outweighs the join's second
     // cached-index traversal, same verdict as ngramJaccard's A/B.
     val a = pruned.select($"hash", $"id".as("a"), $"t1".as("ta"))

@@ -222,6 +222,15 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.contains((0L, 2L)), s"got $pairs")
   }
 
+  test("capturingPlans records an eager tier's pre-checkpoint plan") {
+    val (pairs, plans) = Dedup.capturingPlans(Dedup.minHashLsh(docs,
+      "doc_id", "text", n = 5, numHashes = 64, bands = 32, threshold = 0.4))
+    assert(plans.map(_._1) == Seq("minhash_lsh"))
+    // the bucket exchange the checkpointed result no longer shows
+    assert(plans.head._2.contains("Exchange"), plans.head._2)
+    assert(!pairs.queryExecution.executedPlan.toString.contains("Exchange"))
+  }
+
   test("repeatedSpans: winnowing finds PHASE-SHIFTED shared regions >= w+g-1") {
     // the shared region sits at DIFFERENT offsets in the two docs — a
     // plain stride-8 grid would sample phase-shifted windows and miss

@@ -6,21 +6,14 @@ import graft.model._
 import graft.operators._
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // fresh warehouse per test JVM: a stale location from a previous
-      // run makes saveAsTable fail even on a fresh in-memory catalog
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // a fixed local[4] keeps partition-dependent expectations host-independent;
+  // fresh warehouse per test JVM: a stale location from a previous run
+  // makes saveAsTable fail even on a fresh in-memory catalog
+  lazy val spark: SparkSession = Session.make("graft-test",
+    "spark.master" -> "local[4]",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh").toString)
 }
 
 class PipelineSpec extends AnyFunSuite {
